@@ -5,9 +5,21 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from infofarmsparkml_spark.catalog import load_table  # noqa: F401  (re-export)
+
+
+def estimated_bytes(df: DataFrame) -> int | None:
+    """Catalyst's size estimate of ``df``'s optimized plan, in bytes;
+    None when it cannot be read (Spark Connect exposes no ``_jdf``).
+    Callers take their safe arm on None and warn."""
+    try:
+        return int(
+            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        )
+    except Exception:
+        return None
 
 
 def r(col: Column | str, scale: int = 2) -> Column:

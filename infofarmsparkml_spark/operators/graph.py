@@ -11,9 +11,11 @@ the growing lineage (SURVEY.md §7 hard parts).
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from infofarmsparkml_spark.operators._util import load_table
+from infofarmsparkml_spark.operators._util import estimated_bytes, load_table
 from infofarmsparkml_spark.registry import query
 
 
@@ -92,8 +94,8 @@ def _fact_in_broadcast_range(spark: SparkSession, df: DataFrame) -> bool:
     True. Reads the session threshold so raised thresholds keep the
     guard honest; threshold <= 0 disables auto-broadcast entirely
     (guard moot); an unavailable estimate (Spark Connect exposes no
-    _jdf) returns True — the safe default is an explicit vertex-
-    side build."""
+    _jdf) returns True with a warning — the safe default is an
+    explicit vertex-side build."""
     try:
         thr = _parse_size_bytes(
             spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -105,8 +107,6 @@ def _fact_in_broadcast_range(spark: SparkSession, df: DataFrame) -> bool:
         # session's real threshold. Warn and return the same safe
         # answer as the missing-estimate case below: pin the
         # vertex-side build explicitly.
-        import warnings
-
         warnings.warn(
             "autoBroadcastJoinThreshold unreadable; pinning explicit "
             "vertex-side build (safe default)",
@@ -115,11 +115,13 @@ def _fact_in_broadcast_range(spark: SparkSession, df: DataFrame) -> bool:
         return True
     if thr <= 0:
         return False
-    try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    est = estimated_bytes(df)
+    if est is None:
+        warnings.warn(
+            "broadcast-range guard: no size estimate; pinning the "
+            "vertex-side build (safe arm)",
+            stacklevel=2,
         )
-    except Exception:
         return True
     return est < 3 * thr
 

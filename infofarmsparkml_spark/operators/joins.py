@@ -62,24 +62,16 @@ def join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is scanned exactly once with zero shuffles before the
     final 2-key aggregation.
 
-    r17 (VERDICT r16 #1, settled by measurement): r16 pre-flattened
-    the supplier→nation→region snowflake into one broadcast dim so
-    each fact row paid a single hash probe, kept on at-scale
-    arithmetic despite a neutral-to-negative local reading. The
-    clean interleaved A/B this round (9 rounds, idle host, results
-    identical per arm, scripts/ab_join_broadcast.py,
-    plans/r17/AB_join_broadcast.json) measured the CHAINED form
-    faster at BOTH sf0.1 (min 0.92 vs 1.05 s) and the 10× sf1
-    fixture (min 0.87 vs 0.93 s, median 0.99 vs 1.07 s): this query
-    is fixed-overhead-dominated even at 6M fact rows, and the dim
-    pre-flatten is an extra job per run that never pays back, while
-    Catalyst already pipelines the three chained probes inside one
-    codegen stage with no materialized intermediate row. REVERTED
-    to chained broadcasts per the decision rule (no headline query
-    ships slower than its own before-arm). tpch_q5/q9 KEEP their
-    flattens: there the flatten also moves a selective region/
-    nation filter to the first probe, which this unfiltered
-    aggregate-everything query lacks."""
+    The supplier→nation→region dims are chained broadcasts, not one
+    pre-flattened dim: Catalyst pipelines the three chained probes
+    inside one codegen stage with no materialized intermediate row.
+    Interleaved A/Bs of the flattened form (39a5231) against the chained one
+    (f172f93) read the chained form faster, at sf0.1 and sf1 in
+    plans/r17/AB_join_broadcast.json, and at sf0.1 in 8 of 10 rounds
+    in plans/ab/join_broadcast_39a5231_f172f93_sf0.1.jsonl (a gap
+    inside the spread). tpch_q5/q9 keep their flattens: there the
+    flatten also moves a selective region/nation filter to the first
+    probe, which this unfiltered aggregate-everything query lacks."""
     lf = load_table(spark, sf_dir, "lineitem").select(
         "l_suppkey", "l_extendedprice", "l_discount"
     )

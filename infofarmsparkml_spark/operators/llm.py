@@ -59,10 +59,10 @@ _MINHASH_ROWS = 8
 
 def _minhash_sig_long(tok_sets: DataFrame) -> DataFrame:
     """(doc_id, band, bk) banded-MinHash bucket keys from token
-    sets — the signature half of `llm_minhash_lsh_dedup`, extracted
-    (r14, pure code motion) so diagnostics can count bucket/
-    candidate volume with the operator's OWN construction instead
-    of a drift-prone copy (scripts/pair_mass_diag.py).
+    sets — the signature half of `llm_minhash_lsh_dedup`, kept
+    separate so a diagnostic can count bucket and candidate volume
+    with the operator's own construction instead of a drift-prone
+    copy (PAIRMASS_r15.json was measured this way, at 7023f65).
 
     Unpivots the band keys to long form and lets callers self-join
     ONCE on (band, bk) instead of one self-join per band over the

@@ -181,10 +181,7 @@ def sort_range_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorts.py — above the conf'd byte threshold the stamped frame is
     checkpointed so offsets and stream read ONE physical execution;
     below it the lazy double-derivation is the measured-faster arm)."""
-    from infofarmsparkml_spark.operators.sorts import (
-        _estimated_bytes,
-        _materialize_threshold_bytes,
-    )
+    from infofarmsparkml_spark.operators.sorts import _needs_checkpoint
 
     key = [F.col("o_totalprice").desc(), F.col("o_orderkey")]
     orders = (
@@ -198,7 +195,7 @@ def sort_range_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("pid", F.spark_partition_id())
         .withColumn("mid", F.monotonically_increasing_id())
     )
-    if _estimated_bytes(orders) > _materialize_threshold_bytes(orders):
+    if _needs_checkpoint(orders):
         local = local.localCheckpoint()
     offsets = (
         local.groupBy("pid")

@@ -10,23 +10,12 @@ unpartitioned window.
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from infofarmsparkml_spark.operators._util import load_table
+from infofarmsparkml_spark.operators._util import estimated_bytes, load_table
 from infofarmsparkml_spark.registry import query
-
-
-def _estimated_bytes(df: DataFrame) -> int:
-    """Optimizer size estimate for ``df`` (bytes); 0 when
-    unavailable (e.g. Spark Connect exposes no _jdf) so the caller
-    defaults to the lazy branch — the measured-faster arm at the
-    scales this repo can actually run."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return 0
 
 
 def _materialize_threshold_bytes(df: DataFrame) -> int:
@@ -43,6 +32,21 @@ def _materialize_threshold_bytes(df: DataFrame) -> int:
         )
     except Exception:
         return 1 << 30
+
+
+def _needs_checkpoint(df: DataFrame) -> bool:
+    """True when ``df`` is over the materialize gate of
+    global_row_number (see its docstring), or when its size cannot be
+    estimated: the checkpoint is the safe arm."""
+    size = estimated_bytes(df)
+    if size is None:
+        warnings.warn(
+            "row-number size gate: no size estimate; checkpointing "
+            "(safe arm)",
+            stacklevel=3,
+        )
+        return True
+    return size > _materialize_threshold_bytes(df)
 
 
 def global_row_number(
@@ -107,7 +111,7 @@ def global_row_number(
         .withColumn("_pid", F.spark_partition_id())
         .withColumn("_mid", F.monotonically_increasing_id())
     )
-    if _estimated_bytes(df) > _materialize_threshold_bytes(df):
+    if _needs_checkpoint(df):
         local = local.localCheckpoint()
     offsets = (
         local.groupBy("_pid")

@@ -29,7 +29,7 @@ def get_spark(
     ~2-3x total cores or let AQE coalesce from a higher initial
     number (which we also enable).
     """
-    cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _cpus(cpus)
     nshuffle = str(shuffle_partitions or int(cpus))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -55,3 +55,13 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _cpus(cpus: int | str | None = None) -> str:
+    """Local-mode core count: ``cpus``, else ``$SPARK_GRAFT_CPUS``,
+    else the cores this process may run on."""
+    return str(
+        cpus
+        or os.environ.get("SPARK_GRAFT_CPUS")
+        or len(os.sched_getaffinity(0))
+    )

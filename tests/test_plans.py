@@ -17,17 +17,37 @@ def q(name):
 
 
 def n_exchanges(plan: str) -> int:
-    """Count REAL shuffle nodes (ADVICE r16: bare
+    """Count REAL shuffle nodes, one per plan line (a bare
     plan.count("Exchange") also matches ReusedExchange and any
     AQE-era node rename). Matches the node-specific partitioning
-    forms and excludes Reused/Broadcast exchanges."""
-    return len(
-        re.findall(
-            r"(?<!Reused)Exchange (hashpartitioning|rangepartitioning|"
-            r"SinglePartition|RoundRobinPartitioning)",
-            plan,
-        )
+    forms, which excludes Broadcast exchanges. A ReusedExchange line
+    embeds the text of the exchange it reuses, so such lines are
+    skipped whole."""
+    node = re.compile(
+        r"Exchange (hashpartitioning|rangepartitioning|"
+        r"SinglePartition|RoundRobinPartitioning)"
     )
+    return sum(
+        1
+        for line in plan.splitlines()
+        if "ReusedExchange" not in line and node.search(line)
+    )
+
+
+def test_n_exchanges_skips_reused_exchange():
+    """Spark 4.1 prints a reused shuffle with the reused node's text
+    on the same line; it is not a second shuffle."""
+    plan = "\n".join(
+        [
+            "AdaptiveSparkPlan isFinalPlan=false",
+            "+- SortMergeJoin [k#1L], [k#2L], Inner",
+            "   :- Exchange hashpartitioning(k#1L, 4), "
+            "ENSURE_REQUIREMENTS, [plan_id=10]",
+            "   +- ReusedExchange [k#2L], Exchange "
+            "hashpartitioning(k#1L, 4), ENSURE_REQUIREMENTS, [plan_id=10]",
+        ]
+    )
+    assert n_exchanges(plan) == 1
 
 
 def n_windows(plan: str) -> int:

@@ -12,6 +12,7 @@ loudly here instead of silently mis-ranking.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window as W, functions as F
 
 from infofarmsparkml_spark import registry
@@ -75,6 +76,25 @@ def test_global_row_number_checkpoint_arm_matches_truth(spark, sf_dir):
             spark.conf.set(GATE, prev)
     want = _rows(_truth_sort_multi(spark, sf_dir))
     assert got == want
+
+
+def test_estimated_bytes_unavailable_is_none():
+    from infofarmsparkml_spark.operators._util import estimated_bytes
+
+    assert estimated_bytes(object()) is None
+
+
+def test_unavailable_estimate_takes_checkpoint_arm(spark, sf_dir, monkeypatch):
+    """With no size estimate, global_row_number must take the
+    checkpoint arm and warn, never the unguarded lazy arm."""
+    from infofarmsparkml_spark.operators import sorts
+
+    monkeypatch.setattr(sorts, "estimated_bytes", lambda df: None)
+    with pytest.warns(UserWarning, match="no size estimate"):
+        df = q("sort_multi")(spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan, plan[:2000]
+    assert _rows(df) == _rows(_truth_sort_multi(spark, sf_dir))
 
 
 def test_sort_range_partitioned_both_arms_match_truth(spark, sf_dir):
